@@ -7,7 +7,7 @@ Spark's own Catalyst parser, the unresolved logical plan is walked on the
 driver (lineage is metadata-sized), and the resulting graph is exposed as
 Spark DataFrames (reference persisted MySQL rows instead;
 db_setup_ddl.sql).  Transitive closure over the edge DataFrames is a
-distributed iterative self-join (closure.py) — the one lineage computation
+distributed path-doubling self-join (closure.py) — the one lineage computation
 that is data-sized at scale (millions of edges across an enterprise).
 """
 

@@ -8,9 +8,10 @@ extract each, route to parsed/ or skipped/ on success/failure
 
 Scale note: parsing is driver-CPU-bound metadata work (the reference uses
 ``--num-parallel`` Java threads, :151-163); Spark executors bring nothing
-to a py4j-bound parse loop, so we keep the reference's thread model — a
-ThreadPoolExecutor sharing one JVM parser — and reserve the cluster for
-the closure/consumption queries, which ARE data-sized.
+to a py4j-bound parse loop, so ``run_batch`` extracts the files one after
+another, in sorted order, on the driver through one JVM parser (one
+session, so IDs stay deterministic), and reserves the cluster for the
+closure/consumption queries, which ARE data-sized.
 """
 
 from __future__ import annotations

@@ -23,6 +23,11 @@ _SKIPS = [
     re.compile(r"^msck repair .*", re.I),
 ]
 _VAR_KW = "${hiveconf:"
+# A statement keeps the comment lines ahead of it — ``preprocess`` turns
+# its ``set k=v;`` lines into ``-- set …`` — so ``rewrite_dialect`` and
+# ``unsupported_reason`` split off this prefix of ``--`` lines and
+# ``/* */`` blocks before the ``^``-anchored patterns below are matched.
+_LEADING_COMMENTS = re.compile(r"(?:\s*(?:--[^\n]*|/\*.*?\*/))*\s*", re.S)
 
 # Constructs Catalyst's parser rejects but the reference's grammar accepts
 # without extracting lineage (Bingql.g4: qualify_clause :1110, select_list
@@ -142,10 +147,16 @@ def split_statements(text: str) -> list[str]:
     return out
 
 
+def _split_leading_comments(stmt: str) -> tuple[str, str]:
+    """→ (leading comments and whitespace, statement body)."""
+    n = _LEADING_COMMENTS.match(stmt).end()
+    return stmt[:n], stmt[n:]
+
+
 def unsupported_reason(stmt: str) -> str | None:
     """Dialect constructs we route to skipped/ (parity with reference's
     parse-only treatment)."""
-    m = _UNSUPPORTED.search(stmt)
+    m = _UNSUPPORTED.search(_split_leading_comments(stmt)[1])
     return f"unsupported dialect construct: {m.group(0).strip()}" if m else None
 
 
@@ -454,6 +465,7 @@ def _strip_vendor_ddl(stmt: str) -> tuple[str, bool]:
 
 def rewrite_dialect(stmt: str) -> tuple[str, list[str]]:
     """→ (rewritten statement, list of applied shim tags)."""
+    lead, stmt = _split_leading_comments(stmt)
     applied: list[str] = []
     s2, hit = _rewrite_presto_types(stmt)
     if hit:
@@ -489,4 +501,4 @@ def rewrite_dialect(stmt: str) -> tuple[str, list[str]]:
         # aliases, which a wrapper WHERE sees as plain columns
         stmt = f"SELECT * FROM (\n{body}\n) kch_qualify_wrap WHERE{pred}"
         applied.append("QUALIFY→wrapper WHERE")
-    return stmt, applied
+    return lead + stmt, applied

@@ -4,8 +4,8 @@
 The closure operators are oracle-checked: both engines consume the SAME
 deterministic edge list (frozen below from extracting ``_CORPUS`` with seed
 1000 — ``tests/test_lineage_queries.py`` pins the extractor to it), Spark
-runs the distributed iterative-self-join closure (closure.py) and DuckDB
-runs the equivalent ``WITH RECURSIVE``.  Live extraction itself is a
+runs closure.py's closure (the driver BFS at this size; path doubling
+above SMALL_GRAPH_EDGES) and DuckDB runs the equivalent ``WITH RECURSIVE``.  Live extraction itself is a
 driver-side parse (no SQL equivalent) → rows-only check.
 """
 
@@ -537,7 +537,7 @@ def lineage_cycle_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     path v⇝u, and the shortest such closure is min-distance(v⇝u)+1 —
     so cycle membership is ONE equi-join between the edge table and
     the transitive closure (closure.transitive_closure, the same
-    iterative-BFS artifact table_lineage persists), no new walk.  The
+    min-distance closure table_lineage persists), no new walk.  The
     oracle re-derives it with an independent WITH RECURSIVE walk that
     tracks walk starts instead.
     """

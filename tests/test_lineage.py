@@ -616,6 +616,56 @@ def test_impact_analysis_functions(extract, spark):
     assert c401 in set(up.source_item_id)
 
 
+def _chain(spark, n: int):
+    return spark.createDataFrame(
+        [(i, i + 1) for i in range(n)], "src BIGINT, dst BIGINT"
+    )
+
+
+@pytest.mark.parametrize("distributed", [False, True])
+def test_closure_warns_when_max_hops_cuts_it_off(
+    spark, caplog, monkeypatch, distributed
+):
+    """A closure stopped by ``max_hops`` with pairs still out of reach
+    logs one warning naming the cap, on the driver-BFS branch and the
+    distributed one; a graph the cap covers logs nothing."""
+    from kachess_spark.lineage import closure as C
+
+    if distributed:
+        monkeypatch.setattr(C, "SMALL_GRAPH_EDGES", 0)
+
+    def warned():
+        return [r.getMessage() for r in caplog.records if r.name == C.__name__]
+
+    with caplog.at_level("WARNING", logger=C.__name__):
+        assert C.transitive_closure(_chain(spark, 5), "src", "dst").count() == 15
+        assert warned() == []
+        got = C.transitive_closure(_chain(spark, 25), "src", "dst")
+        # pairs 21-25 hops apart are cut: 26 nodes, sum of (26 - d), d ≤ 20
+        assert got.count() == sum(26 - d for d in range(1, 21))
+    assert len(warned()) == 1 and "max_hops=20" in warned()[0]
+
+
+def test_distributed_closure_job_count(spark, monkeypatch):
+    """Path doubling closes a 30-edge chain at the default cap in
+    ⌈log2 20⌉ = 5 rounds of a few jobs each: at most 50 Spark jobs."""
+    from kachess_spark.lineage import closure as C
+
+    monkeypatch.setattr(C, "SMALL_GRAPH_EDGES", 0)
+    sc = spark.sparkContext
+    group = "test_distributed_closure_job_count"
+    df = _chain(spark, 30)
+    sc.setJobGroup(group, "distributed closure of a 30-edge chain")
+    try:
+        rows = C.transitive_closure(df, "src", "dst").collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(rows) == sum(31 - d for d in range(1, 21))
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 50, len(jobs)
+
+
 def test_temp_table_rename_on_close(spark):
     """closeSession de-scopes temp tables by renaming to
     tmp_<name>_<source> (closeSession:79-100)."""
@@ -801,6 +851,39 @@ def test_dialect_shims_extract_teradata_forms(spark):
         "SELECT * FROM (SELECT col101 FROM dw.tab10 QUALIFY col101 = 1) q;"
     )
     assert sess2.skipped and "QUALIFY" in sess2.skipped[0][1]
+
+
+def test_dialect_shims_match_after_leading_comments():
+    """``preprocess`` leaves ``set k=v;`` lines in the next statement as
+    ``-- set …`` comments; the anchored shims and unsupported-construct
+    checks still see the statement behind ``--`` lines and ``/* */``
+    blocks, and keep the comments in the rewritten text."""
+    from kachess_spark.lineage.preprocess import rewrite_dialect, unsupported_reason
+
+    ddl = "CREATE TABLE dw.p (a varchar)"
+    assert rewrite_dialect(ddl)[1] == ["presto-types"]
+    s, applied = rewrite_dialect("-- set x=1;\n" + ddl)
+    assert applied == ["presto-types"]
+    assert s == "-- set x=1;\nCREATE TABLE dw.p (a STRING)"
+
+    (stmt,) = split_statements(preprocess("set x=1;\n" + ddl + ";"))
+    assert stmt.startswith("-- set x=1;")
+    assert rewrite_dialect(stmt)[1] == ["presto-types"]
+
+    _, applied = rewrite_dialect(
+        "/* header\n block */\n-- note\nSEL TOP 3 col101 FROM dw.tab10"
+    )
+    assert applied == ["SEL→SELECT", "TOP 3→LIMIT"]
+    _, applied = rewrite_dialect(
+        "-- set a=b;\nCREATE TABLE adhoc.t (a bigint) NOLOGGING"
+    )
+    assert applied == ["vendor-ddl-options"]
+
+    reason = unsupported_reason("-- set x=1;\nDECLARE c CURSOR FOR SELECT 1")
+    assert reason == "unsupported dialect construct: DECLARE c CURSOR"
+    assert unsupported_reason("/* c */ SEL\tcol101 FROM dw.tab10") is not None
+    # a comment mentioning a construct is not the construct
+    assert unsupported_reason("-- SEL x\nSELECT col101 FROM dw.tab10") is None
 
 
 def test_presto_typed_ddl_extracts_like_hive(spark):

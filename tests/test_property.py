@@ -8,6 +8,7 @@ BFS on random DAGs; the statement splitter against structural invariants.
 from __future__ import annotations
 
 from collections import deque
+from contextlib import contextmanager
 
 import pytest
 from hypothesis import HealthCheck, given, settings
@@ -19,8 +20,11 @@ from kachess_spark.lineage.preprocess import preprocess, split_statements
 # ---------------------------------------------------------------- closure
 
 
-def _bfs_closure(edges: list[tuple[int, int]]) -> dict[tuple[int, int], int]:
-    """Reference implementation: min-hop distances by BFS from each node."""
+def _bfs_closure(
+    edges: list[tuple[int, int]], max_hops: int | None = None
+) -> dict[tuple[int, int], int]:
+    """Reference implementation: min-hop distances by BFS from each node,
+    optionally only the pairs within ``max_hops``."""
     adj: dict[int, list[int]] = {}
     for a, b in edges:
         if a != b:
@@ -36,9 +40,34 @@ def _bfs_closure(edges: list[tuple[int, int]]) -> dict[tuple[int, int], int]:
                     dist[v] = dist[u] + 1
                     q.append(v)
         for v, d in dist.items():
-            if v != src:
+            if v != src and (max_hops is None or d <= max_hops):
                 out[(src, v)] = d
     return out
+
+
+@contextmanager
+def _distributed_branch():
+    """The closure module with its distributed branch forced (normally
+    taken only above SMALL_GRAPH_EDGES)."""
+    from kachess_spark.lineage import closure as C
+
+    old = C.SMALL_GRAPH_EDGES
+    C.SMALL_GRAPH_EDGES = 0
+    try:
+        yield C
+    finally:
+        C.SMALL_GRAPH_EDGES = old
+
+
+def _distributed_closure(spark, edges, max_hops=20):
+    """Closure of ``edges`` on the distributed branch, as a pair → distance
+    dict."""
+    with _distributed_branch() as C:
+        df = spark.createDataFrame(edges, "src BIGINT, dst BIGINT")
+        return {
+            (r.ancestor_id, r.descendant_id): r.distance
+            for r in C.transitive_closure(df, "src", "dst", max_hops).collect()
+        }
 
 
 @st.composite
@@ -153,21 +182,9 @@ def test_insert_by_name_columns(spark):
           suppress_health_check=[HealthCheck.too_slow])
 @given(dags())
 def test_distributed_closure_path_matches_bfs(spark, edges):
-    """Force the distributed iterative-self-join path (normally taken
-    only above SMALL_GRAPH_EDGES) and check it against BFS too."""
-    from kachess_spark.lineage import closure as C
-
-    old = C.SMALL_GRAPH_EDGES
-    C.SMALL_GRAPH_EDGES = 0
-    try:
-        df = spark.createDataFrame(edges, "src BIGINT, dst BIGINT")
-        got = {
-            (r.ancestor_id, r.descendant_id): r.distance
-            for r in C.transitive_closure(df, "src", "dst").collect()
-        }
-        assert got == _bfs_closure(edges)
-    finally:
-        C.SMALL_GRAPH_EDGES = old
+    """Force the distributed path-doubling branch and check it against
+    BFS too."""
+    assert _distributed_closure(spark, edges) == _bfs_closure(edges)
 
 
 # ------------------------------------------------- connected components
@@ -417,22 +434,58 @@ def test_closure_terminates_on_cycles(spark, edges):
 )
 @given(cyclic_graphs())
 def test_distributed_closure_terminates_on_cycles(spark, edges):
-    """Distributed iterative path on cyclic graphs: the anti-join keeps
-    every (ancestor, descendant) pair at its first (minimum) distance,
-    so the frontier drains instead of orbiting the cycle forever."""
-    from kachess_spark.lineage import closure as C
+    """Distributed path doubling on cyclic graphs: the per-pair minimum
+    keeps every (ancestor, descendant) pair at its shortest distance, so
+    the pair count stops growing instead of orbiting the cycle forever."""
+    assert _distributed_closure(spark, edges) == _bfs_closure(edges)
 
-    old = C.SMALL_GRAPH_EDGES
-    C.SMALL_GRAPH_EDGES = 0
-    try:
-        df = spark.createDataFrame(edges, "src BIGINT, dst BIGINT")
-        got = {
-            (r.ancestor_id, r.descendant_id): r.distance
-            for r in C.transitive_closure(df, "src", "dst").collect()
-        }
-        assert got == _bfs_closure(edges)
-    finally:
-        C.SMALL_GRAPH_EDGES = old
+
+# ------------------------------------------- closure capped by max_hops
+
+_CAPS = [1, 2, 3, 5, 20]
+
+
+@pytest.mark.parametrize("k", _CAPS)
+def test_distributed_closure_cap_on_chain(spark, k):
+    """Path doubling with a cap that cuts a chain off: exactly the pairs
+    within k hops, each at its minimum distance."""
+    chain = [(i, i + 1) for i in range(k + 4)]
+    assert _distributed_closure(spark, chain, k) == _bfs_closure(chain, k)
+
+
+@pytest.mark.parametrize("k", _CAPS)
+@settings(
+    max_examples=2,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow],
+)
+@given(cyclic_graphs())
+def test_distributed_closure_cap_on_cycles(spark, k, edges):
+    """Capped path doubling on cyclic graphs equals the capped BFS: the
+    per-round cap never drops a pair whose shortest path fits."""
+    assert _distributed_closure(spark, edges, k) == _bfs_closure(edges, k)
+
+
+@settings(
+    max_examples=3,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow],
+)
+@given(dags(), st.data())
+def test_distributed_lookups_match_capped_bfs(spark, edges, data):
+    """impacted_by / feeds_into at max_hops=4 on the distributed branch
+    equal the 4-hop BFS closure filtered to the seed columns."""
+    nodes = sorted({n for e in edges for n in e})
+    seeds = data.draw(st.lists(st.sampled_from(nodes), min_size=1, max_size=3))
+    want = _bfs_closure(edges, 4)
+    rel = spark.createDataFrame(
+        edges, "parent_select_item_id BIGINT, child_select_item_id BIGINT"
+    )
+    with _distributed_branch() as C:
+        down = sorted(map(tuple, C.impacted_by(rel, seeds, 4).collect()))
+        up = sorted(map(tuple, C.feeds_into(rel, seeds, 4).collect()))
+    assert down == sorted((b, d) for (a, b), d in want.items() if a in seeds)
+    assert up == sorted((a, d) for (a, b), d in want.items() if b in seeds)
 
 
 # ------------------------------------------------- substring-span cut
